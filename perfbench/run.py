@@ -283,7 +283,7 @@ def main():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--catalog-rate", type=float, default=4.0,
+    ap.add_argument("--catalog-rate", type=float, default=1.5,
                     help="catalog_api arrival rate, requests per second")
     ap.add_argument("--selftest", action="store_true")
     ap.add_argument("--determinism", action="store_true")

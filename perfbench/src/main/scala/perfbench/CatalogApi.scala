@@ -37,6 +37,8 @@ object CatalogApi {
   val PageSize = 50
   val SetupRepeats = 3
   val BlockSize = 20
+  /** Enough API requests for a tail even in a short run. */
+  val MinSlots = 15
 
   private val readKinds = Set("get_key", "get_name", "search", "page", "dashboard")
   private val mix: Seq[(String, Double)] = Seq(
@@ -48,10 +50,10 @@ object CatalogApi {
   final case class Req(due: Double, kind: String, salt: Long)
 
   /** The open-loop schedule: request slots evenly spaced at `rate` per
-    * second for `seconds` seconds. Every [[DropEverySlots]]th slot is an S3
-    * drop; the others are API requests whose kinds come in seeded, shuffled
-    * blocks of [[BlockSize]] that hold the mix exactly, so every run sends
-    * the same share of each kind. A drop takes a slot of its own instead of
+    * second for `seconds` seconds (at least [[MinSlots]] slots). Every
+    * [[DropEverySlots]]th slot is an S3 drop; the others are API requests
+    * whose kinds come in seeded, shuffled blocks of [[BlockSize]] that hold
+    * the mix exactly, so every run sends the same share of each kind. A drop takes a slot of its own instead of
     * landing between requests, so the run's queueing is a property of the
     * program, not of one seed's ordering. */
   def schedule(seed: Long, rate: Double, seconds: Int): Seq[Req] = {
@@ -59,7 +61,8 @@ object CatalogApi {
     val bag = mix.flatMap { case (k, p) => Seq.fill(math.round(p * BlockSize).toInt)(k) }
     val kinds = Iterator.continually(
       bag.map(k => (r.nextLong(), k)).sortBy(_._1).map(_._2)).flatten
-    Iterator.from(0).map(i => i -> (i + 0.5) / rate).takeWhile(_._2 < seconds)
+    Iterator.from(0).map(i => i -> (i + 0.5) / rate)
+      .takeWhile { case (i, t) => t < seconds || i < MinSlots }
       .map { case (i, t) =>
         Req(t, if (i % DropEverySlots == DropEverySlots / 2) "csv" else kinds.next(), r.nextLong())
       }.toSeq

@@ -67,7 +67,7 @@ object Main {
     val work = Paths.get(args("--work")).toAbsolutePath
     val cpus = args.get("--cpus").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
-    val catalogRate = args.get("--catalog-rate").map(_.toDouble).getOrElse(4.0)
+    val catalogRate = args.get("--catalog-rate").map(_.toDouble).getOrElse(1.5)
     val body: Ctx => Unit = workload match {
       case "catalog_api" => CatalogApi.run
       case "sf01_batch" => Sf01Batch.run
