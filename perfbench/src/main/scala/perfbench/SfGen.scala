@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Seeded generator for the TPC-H-ish tables the query registry reads
   * (`graft.Tables.names`), with the schemas, value ranges and row counts of
-  * the driver's sf0.1 test data (FIXTURES.md §2): 600k lineitems, 150k
+  * the repository's sf0.1 test data (TESTDATA.md, FIXTURES.md §2): 600k lineitems, 150k
   * orders, 100k events, 5,000 documents (5% planted near duplicates) and
   * 2,000 64-dim unit embeddings. Everything fits in memory; data larger
   * than memory is ScaleBench's job.
