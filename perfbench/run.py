@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload against the program in this checkout.
 
-    python3 perfbench/run.py --workload W --seed N --seconds S --trace 0|1
+    python3 perfbench/run.py --catalog-rate R --workload W --seed N --seconds S --trace 0|1
 
 builds the program from source (once per source state, with sbt, into
 perfbench/target), runs the workload in a fresh JVM whose scratch
@@ -152,13 +152,6 @@ def git_state():
         return None, None
 
 
-def nproc():
-    try:
-        return len(os.sched_getaffinity(0))
-    except AttributeError:
-        return os.cpu_count() or 1
-
-
 def run_jvm(classpath, jvm_args, limit_s, check=True):
     """Run perfbench.Main in a fresh per-run directory; returns its stdout
     lines, or exits non-zero when the JVM overruns (or, with `check`,
@@ -236,19 +229,21 @@ def shape(result, workload, trace):
 def one_run(args, classpath, stamp, started):
     jvm_args = ["--workload", args.workload, "--seed", str(args.seed),
                 "--seconds", str(args.seconds), "--trace", str(args.trace),
-                "--cpus", str(nproc()), "--catalog-rate", str(args.catalog_rate)]
+                "--catalog-rate", str(args.catalog_rate)]
     limit = max(30, RUN_LIMIT_S - int(time.time() - started))
     lines = run_jvm(classpath, jvm_args, limit)
     info, result = parse(lines)
     head, dirty = git_state()
     provenance = {
-        "nproc": nproc(), "master": info.get("master"),
+        "nproc": info.get("cpus"), "master": info.get("master"),
         "driver_heap": HEAP, "driver_heap_max_mb": info.get("driver_heap_max_mb"),
         "spark_version": info.get("spark_version"),
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace,
         "sf_dir": "generated per run (perfbench SfGen, sf0.1 shape)"
-        if args.workload == "sf01_batch" else None,
+        if args.workload == "sf01_batch" else
+        "generated per run for the queries layer (perfbench SfGen, sf0.02)"
+        if args.workload == "index_churn" and args.trace else None,
         "git_head": head, "git_dirty": dirty, "source_sha256": stamp,
         "timestamp": datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds"),
         "params": info.get("params"),
@@ -281,21 +276,23 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=["catalog_api", "sf01_batch", "index_churn"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=20)
+    ap.add_argument("--seconds", type=int)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--catalog-rate", type=float, default=1.5,
-                    help="catalog_api arrival rate, requests per second")
+    ap.add_argument("--catalog-rate", type=float,
+                    help="catalog_api arrival rate, requests per second "
+                         "(BENCHMARK.json's command sets it)")
     ap.add_argument("--selftest", action="store_true")
     ap.add_argument("--determinism", action="store_true")
     args = ap.parse_args()
+    if not args.selftest and (not args.workload or args.seconds is None
+                              or args.catalog_rate is None):
+        fail("--workload, --seconds and --catalog-rate are required")
     classpath, stamp = build()
     started = time.time()
     if args.selftest:
         code, lines = run_jvm(classpath, ["--selftest"], RUN_LIMIT_S, check=False)
         print("\n".join(lines))
         sys.exit(1 if code else 0)
-    if not args.workload:
-        fail("--workload is required")
     if args.determinism:
         determinism(args, classpath, stamp)
         return

@@ -41,6 +41,9 @@ object CatalogApi {
   val MinSlots = 15
 
   private val readKinds = Set("get_key", "get_name", "search", "page", "dashboard")
+  /** Request mix. The reference keeps no record of its traffic, so these
+    * shares, the key skew and the drop cadence are assumptions; the README
+    * gives the reason for each. */
   private val mix: Seq[(String, Double)] = Seq(
     "get_key" -> 0.40, "get_name" -> 0.10, "search" -> 0.10, "page" -> 0.05,
     "dashboard" -> 0.05, "create" -> 0.05, "update" -> 0.20, "delete" -> 0.05)

@@ -24,6 +24,10 @@ import graft.store.{CurationIngest, SimHashRegime, SnapshotStore, TextIndex}
   * query batches with `TextIndex.query`. Every [[StepsPerCycle]] steps it
   * runs `Graft.maintainAll`.
   *
+  * A run does a fixed amount of work: [[timedSteps]] depends on `--seconds`
+  * alone, never on how fast the host is, so every run measures the same
+  * store states.
+  *
   * Inputs are seeded documents over a Zipf vocabulary; a stated share of
   * every batch are planted exact duplicates (same tokens, different
   * whitespace) and near duplicates (one token replaced).
@@ -42,11 +46,12 @@ object IndexChurn {
   val ExactShare = 0.10
   val NearShare = 0.10
   val TakedownsPerStep = 10
-  val ServeCallsPerStep = 5
-  val QueriesPerCall = 4
+  /** One query per serve call, so a run holds enough calls for a p75 tail. */
+  val ServeCallsPerStep = 14
+  val QueriesPerCall = 1
   val StepsPerCycle = 1
-  /** Enough serve calls for a tail even when the host runs slow. */
-  val MinTimedSteps = 3
+  /** Seconds of `--seconds` per timed step. */
+  val SecondsPerStep = 10
   val SetupRepeats = 3
   val Prefix = "cur"
   val TextTable = "docs_text"
@@ -65,6 +70,10 @@ object IndexChurn {
     * down and the BM25 query batches to serve. */
   final case class StepInput(docs: Seq[(Long, String)], plants: Seq[Plant],
                              victims: Seq[Long], queries: Seq[Seq[(Int, String)]])
+
+  /** Timed steps of a run: one per [[SecondsPerStep]] of `--seconds`, at
+    * least three. */
+  def timedSteps(seconds: Int): Int = math.max(3, seconds / SecondsPerStep)
 
   def baseDocs(seed: Long): IndexedSeq[(Long, String)] = {
     val r = Gen.rng(seed, 41)
@@ -257,12 +266,10 @@ object IndexChurn {
     maintain(timed = false)
     val warmSpans = tr.finish().size
 
-    val start = System.nanoTime()
-    var timedSteps = 0
-    while (timedSteps < MinTimedSteps || System.nanoTime() < ctx.deadlineNs(start)) {
+    val nSteps = timedSteps(ctx.seconds)
+    (1 to nSteps).foreach { i =>
       oneStep(timed = true)
-      timedSteps += 1
-      if (timedSteps % StepsPerCycle == 0) maintain(timed = true)
+      if (i % StepsPerCycle == 0) maintain(timed = true)
     }
     val spans = tr.finish().drop(warmSpans)
 
@@ -288,9 +295,9 @@ object IndexChurn {
         "takedowns_per_step" -> TakedownsPerStep, "serve_calls_per_step" -> ServeCallsPerStep,
         "queries_per_call" -> QueriesPerCall, "steps_per_cycle" -> StepsPerCycle,
         "setup_repeats" -> SetupRepeats, "vocab" -> Gen.churnVocab.size, "zipf_s" -> 1.05),
-      "timed_steps" -> timedSteps, "maintains" -> maintainS.size,
+      "timed_steps" -> nSteps, "maintains" -> maintainS.size,
       "serve_tail" -> tail.toString,
-      "churn_ingest_docs_per_s" -> timedSteps * BatchDocs / ingestS.sum,
+      "churn_ingest_docs_per_s" -> nSteps * BatchDocs / ingestS.sum,
       "churn_serve_p50_ms" -> Stats.median(serveMs.toSeq),
       "churn_takedown_p50_ms" -> Stats.median(takedownMs.toSeq),
       "churn_maintain_s" -> Stats.median(maintainS.toSeq),
@@ -300,7 +307,7 @@ object IndexChurn {
       res.metric("read_p50_ms", Stats.median(serveMs.toSeq), "ms")
       res.metric("tail_ms", tail.value, "ms")
       res.metric("write_p50_ms", Stats.median(takedownMs.toSeq), "ms")
-      res.metric("ingest_per_s", timedSteps * BatchDocs / ingestS.sum, "1/s")
+      res.metric("ingest_per_s", nSteps * BatchDocs / ingestS.sum, "1/s")
       res.metric("bytes_per_user_byte", Stats.median(bytesRatio.toSeq), "ratio")
     } else {
       Report.spans(ctx, spans, Seq("store.CurationIngest.ingestBatchOnce"),

@@ -49,7 +49,8 @@ final case class Ctx(spark: SparkSession, tracer: Tracer, seed: Long,
 }
 
 /** Entry point: `perfbench.Main --workload W --seed N --seconds S --trace 0|1
-  * --work DIR [--catalog-rate R] [--cpus C]`, or `--selftest`.
+  * --work DIR --catalog-rate R`, or `--selftest`. Spark runs at
+  * `local[availableProcessors]`, which respects the CPU affinity.
   *
   * Prints `PERFBENCH_INFO <json>` (parameters and detail) and then, as the
   * last line, the result object. `perfbench/run.py` is the supported way
@@ -65,9 +66,8 @@ object Main {
     val seconds = args("--seconds").toInt
     val trace = args("--trace") == "1"
     val work = Paths.get(args("--work")).toAbsolutePath
-    val cpus = args.get("--cpus").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val catalogRate = args.get("--catalog-rate").map(_.toDouble).getOrElse(1.5)
+    val cpus = Runtime.getRuntime.availableProcessors()
+    val catalogRate = args("--catalog-rate").toDouble
     val body: Ctx => Unit = workload match {
       case "catalog_api" => CatalogApi.run
       case "sf01_batch" => Sf01Batch.run
@@ -79,7 +79,7 @@ object Main {
     val res = new Result
     val tracer = new Tracer(spark, trace)
     res.info ++= Seq("workload" -> workload, "seed" -> seed, "seconds" -> seconds,
-      "trace" -> trace, "master" -> spark.sparkContext.master,
+      "trace" -> trace, "cpus" -> cpus, "master" -> spark.sparkContext.master,
       "driver_heap_max_mb" -> Runtime.getRuntime.maxMemory / (1 << 20),
       "spark_version" -> spark.version)
     val ctx = Ctx(spark, tracer, seed, seconds, work, cpus, catalogRate, res)
@@ -87,6 +87,7 @@ object Main {
       body(ctx)
       if (trace) {
         Kernels.run(ctx)
+        if (workload == "index_churn") Sf01Batch.layer(ctx)
         res.metric("driver.heap_peak_mb", heapPeakMb(), "MB")
         res.metric("spark.task_gc_s", tracer.totalGcMs / 1000.0, "s")
         res.metric("spark.spill_bytes", tracer.totalSpillBytes.toDouble, "bytes")

@@ -68,11 +68,83 @@ object Sf01Batch {
     (r.getLong(0), r.getLong(1))
   }
 
-  def run(ctx: Ctx): Unit = {
+  /** One timed execution; `span` is its query span in a traced run. */
+  final case class Exec(pass: Int, q: String, ms: Double, span: Option[Span])
+
+  /** Runs the subset over the tables in `dir`: one untimed warm-up pass
+    * (JIT, codegen, footer caches) that sets the reference answers, then
+    * passes in a seed-shuffled order while `more(pass)` holds, checking
+    * every answer against the reference. Returns the timed executions. */
+  def passes(ctx: Ctx, dir: String)(more: Int => Boolean): Seq[Exec] = {
     val spark = ctx.spark
     val res = ctx.res
     val tr = ctx.tracer
+    def runOne(q: String): Option[((Long, Long), Double, Option[Span])] = {
+      spark.catalog.clearCache()
+      res.op(q) {
+        val name = s"queries.${family(q)}"
+        val t0 = System.nanoTime()
+        val fp = tr.span(name)(fingerprint(SparkEntry.queries(q)(spark, dir)))
+        (fp, (System.nanoTime() - t0) / 1e6, if (ctx.trace) tr.last(name) else None)
+      }
+    }
     val subset = Analytics ++ Curation
+    val reference = subset.flatMap(q => runOne(q).map(x => q -> x._1)).toMap
+    val execs = mutable.ArrayBuffer.empty[Exec]
+    var pass = 0
+    while (more(pass)) {
+      val r = Gen.rng(ctx.seed, 500 + pass)
+      subset.map(q => (r.nextLong(), q)).sortBy(_._1).map(_._2).foreach { q =>
+        runOne(q).foreach { case (fp, ms, span) =>
+          res.check(reference.get(q).contains(fp),
+            s"$q pass $pass returned (rows, hash) $fp, want ${reference.get(q)}")
+          execs += Exec(pass, q, ms, span)
+        }
+      }
+      pass += 1
+    }
+    tr.finish() // every counter of the spans is final after this
+    execs.toSeq
+  }
+
+  /** `queries.<family>.{ms,plan_ms,jobs,tasks,shuffle_bytes,task_cpu_s}`:
+    * per pass, the sum over the family's queries; reported as the median
+    * over passes. */
+  def familyMetrics(ctx: Ctx, execs: Seq[Exec]): Unit = {
+    val perPass = execs.flatMap(e => e.span.map(_ -> e.pass))
+    Families.foreach { f =>
+      val byPass = perPass.filter(_._1.name == s"queries.$f").groupBy(_._2).values.toSeq
+      if (byPass.nonEmpty) {
+        def m(v: Span => Double): Double = Stats.median(byPass.map(_.map(x => v(x._1)).sum))
+        ctx.res.metric(s"queries.$f.ms", m(_.wallMs), "ms")
+        ctx.res.metric(s"queries.$f.plan_ms", m(_.planMs), "ms")
+        ctx.res.metric(s"queries.$f.jobs", m(_.jobs.toDouble), "count")
+        ctx.res.metric(s"queries.$f.tasks", m(_.tasks.toDouble), "count")
+        ctx.res.metric(s"queries.$f.shuffle_bytes", m(_.shuffleBytes.toDouble), "bytes")
+        ctx.res.metric(s"queries.$f.task_cpu_s", m(_.taskCpuNs / 1e9), "s")
+      }
+    }
+    Report.spans(ctx, perPass.map(_._1), Families.map(f => s"queries.$f"), Nil)
+  }
+
+  /** The queries layer inside another workload's traced run: the subset
+    * over small generated tables (scale factor [[LayerSf]]), with
+    * [[LayerPasses]] traced passes after the warm-up pass. Run after the
+    * workload itself, so it adds nothing to the workload's own figures. */
+  val LayerSf = 0.02
+  val LayerPasses = 3
+
+  def layer(ctx: Ctx): Unit = {
+    val dir = ctx.work.resolve("sf-layer").toString
+    SfGen.generate(ctx.spark, dir, ctx.seed, LayerSf)
+    familyMetrics(ctx, passes(ctx, dir)(_ < LayerPasses))
+    ctx.res.info("queries_layer") = Map("sf" -> LayerSf, "passes" -> LayerPasses,
+      "tables_rows" -> SfGen.rows(LayerSf), "analytics" -> Analytics, "curation" -> Curation)
+  }
+
+  def run(ctx: Ctx): Unit = {
+    val spark = ctx.spark
+    val res = ctx.res
     // Inputs are written once, untimed; set-up is opening every table
     // (footer read and first scan), as an analyst session starts.
     val dir = ctx.work.resolve("sf").toString
@@ -82,82 +154,38 @@ object Sf01Batch {
       Tables.names.foreach(Tables.load(spark, dir, _).count())
     }
 
-    def runOne(q: String): Option[((Long, Long), Double)] = {
-      spark.catalog.clearCache()
-      res.op(q) {
-        val t0 = System.nanoTime()
-        val fp = tr.span(s"queries.${family(q)}") {
-          fingerprint(SparkEntry.queries(q)(spark, dir))
-        }
-        (fp, (System.nanoTime() - t0) / 1e6)
-      }
+    // The run's clock starts after the warm-up pass, at the first timed one.
+    var deadline = 0L
+    val execs = passes(ctx, dir) { pass =>
+      if (pass == 0) deadline = ctx.deadlineNs(System.nanoTime())
+      pass < 2 || System.nanoTime() < deadline
+    }
+    val passMs = execs.groupBy(_.pass).toSeq.sortBy(_._1).map { case (_, mine) =>
+      (mine.filter(e => Analytics.contains(e.q)).map(_.ms).sum,
+        mine.filter(e => Curation.contains(e.q)).map(_.ms).sum)
     }
 
-    // Untimed warm-up pass: JIT, codegen and footer caches; sets the
-    // reference answers.
-    val reference = subset.flatMap(q => runOne(q).map(x => q -> x._1)).toMap
-    val warmSpans = tr.finish().size
-
-    final case class Exec(pass: Int, q: String, ms: Double)
-    val execs = mutable.ArrayBuffer.empty[Exec]
-    val passMs = mutable.ArrayBuffer.empty[(Double, Double)] // (analytics, curation)
-    val start = System.nanoTime()
-    val deadline = ctx.deadlineNs(start)
-    var pass = 0
-    while (pass < 2 || System.nanoTime() < deadline) {
-      val order = {
-        val r = Gen.rng(ctx.seed, 500 + pass)
-        subset.map(q => (r.nextLong(), q)).sortBy(_._1).map(_._2)
-      }
-      order.foreach { q =>
-        runOne(q).foreach { case (fp, ms) =>
-          res.check(reference.get(q).contains(fp),
-            s"$q pass $pass returned (rows, hash) $fp, want ${reference.get(q)}")
-          execs += Exec(pass, q, ms)
-        }
-      }
-      val mine = execs.filter(_.pass == pass)
-      passMs += ((mine.filter(e => Analytics.contains(e.q)).map(_.ms).sum,
-        mine.filter(e => Curation.contains(e.q)).map(_.ms).sum))
-      pass += 1
-    }
-
-    val lat = execs.map(_.ms).toSeq
+    val subset = Analytics ++ Curation
+    val lat = execs.map(_.ms)
     val tail = Stats.tail(lat)
-    val totalS = execs.map(_.ms).sum / 1000.0
+    val totalS = lat.sum / 1000.0
     res.info ++= Seq(
       "params" -> Map("sf" -> Sf, "tables_rows" -> SfGen.rows(Sf),
         "analytics" -> Analytics, "curation" -> Curation, "setup_repeats" -> SetupRepeats),
-      "passes" -> pass, "executions" -> execs.size, "tail" -> tail.toString,
-      "analytics_pass_s" -> Stats.median(passMs.map(_._1 / 1000).toSeq),
-      "curation_pass_s" -> Stats.median(passMs.map(_._2 / 1000).toSeq),
-      "query_median_ms" -> subset.map(q => q -> Stats.median(execs.filter(_.q == q).map(_.ms).toSeq)).toMap)
+      "passes" -> passMs.size, "executions" -> execs.size, "tail" -> tail.toString,
+      "analytics_pass_s" -> Stats.median(passMs.map(_._1 / 1000)),
+      "curation_pass_s" -> Stats.median(passMs.map(_._2 / 1000)),
+      "query_median_ms" -> subset.map(q => q -> Stats.median(execs.filter(_.q == q).map(_.ms))).toMap)
     if (!ctx.trace) {
       res.metric("query_p50_ms", Stats.median(lat), "ms")
       res.metric("query_tail_ms", tail.value, "ms")
-      res.metric("analytics_pass_s", Stats.median(passMs.map(_._1 / 1000).toSeq), "s")
-      res.metric("curation_pass_s", Stats.median(passMs.map(_._2 / 1000).toSeq), "s")
+      res.metric("analytics_pass_s", Stats.median(passMs.map(_._1 / 1000)), "s")
+      res.metric("curation_pass_s", Stats.median(passMs.map(_._2 / 1000)), "s")
       res.metric("queries_per_s", execs.size / totalS, "1/s")
     } else {
-      val spans = tr.finish().drop(warmSpans)
-      // Per family: the median over passes of the family's share of a pass.
-      require(spans.size == execs.size, s"${spans.size} query spans for ${execs.size} executions")
-      val perPass = spans.zip(execs.map(_.pass))
-      Families.foreach { f =>
-        val byPass = perPass.filter(_._1.name == s"queries.$f").groupBy(_._2).values.toSeq
-        if (byPass.nonEmpty) {
-          def m(v: Span => Double): Double = Stats.median(byPass.map(_.map(x => v(x._1)).sum))
-          res.metric(s"queries.$f.ms", m(_.wallMs), "ms")
-          res.metric(s"queries.$f.plan_ms", m(_.planMs), "ms")
-          res.metric(s"queries.$f.jobs", m(_.jobs.toDouble), "count")
-          res.metric(s"queries.$f.tasks", m(_.tasks.toDouble), "count")
-          res.metric(s"queries.$f.shuffle_bytes", m(_.shuffleBytes.toDouble), "bytes")
-          res.metric(s"queries.$f.task_cpu_s", m(_.taskCpuNs / 1e9), "s")
-        }
-      }
-      Report.spans(ctx, spans, Families.map(f => s"queries.$f"), Nil)
-      res.metric("queries.analytics.pass_s", Stats.median(passMs.map(_._1 / 1000).toSeq), "s")
-      res.metric("queries.curation.pass_s", Stats.median(passMs.map(_._2 / 1000).toSeq), "s")
+      familyMetrics(ctx, execs)
+      res.metric("queries.analytics.pass_s", Stats.median(passMs.map(_._1 / 1000)), "s")
+      res.metric("queries.curation.pass_s", Stats.median(passMs.map(_._2 / 1000)), "s")
       res.metric("trace.overhead_ratio",
         Report.overhead(ctx)(fingerprint(SparkEntry.queries("j2_inner")(spark, dir))), "ratio")
     }
